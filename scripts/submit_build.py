@@ -26,7 +26,13 @@ Usage (two cluster sizes, the north rule's scaling evidence):
 
 Outputs under --output: ``nodes/``, ``edges/``, ``triples/`` parquet
 directories plus ``_build_manifest.json`` (row counts, elapsed,
-config echo) for downstream ingest / CI assertions.
+config echo, and per table the rows, write seconds and Spark jobs of
+its write and read-back) for downstream ingest / CI assertions.
+
+Edges are written before triples whatever the ``--tables`` order, and
+when both are written triples are projected from the stored edges, so
+the edge union (and the transcript derivation inside it) is evaluated
+once per job, not once per table.
 """
 
 from __future__ import annotations
@@ -65,6 +71,37 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
+def write_table(spark, df, name: str, output: str, table_prefix: str | None):
+    """Write ``df`` as output table ``name``; return the stored table."""
+    # Output stays clustered by the build's conv_id-prefixed keys;
+    # no terminal repartition — at 100 TB a coalesce here would
+    # serialize the write, and downstream readers want many files.
+    if table_prefix:
+        # Iceberg production path: V2 writeTo against whatever
+        # catalog the spark-submit line configured. createOrReplace
+        # is the idempotent-rerun analog of overwrite; incremental
+        # jobs use the MERGE path in sources/sinks.py instead.
+        from pyspark.errors import AnalysisException
+
+        tbl = f"{table_prefix}_{name}"
+        try:
+            # atomic replace where the catalog supports RTAS (Iceberg)
+            df.writeTo(tbl).createOrReplace()
+        except AnalysisException as e:
+            # V2SessionCatalog (plain warehouse) has no RTAS:
+            # non-atomic drop+create is the idempotent fallback. Any
+            # other failure (a failed write included) must not drop
+            # the existing table.
+            if e.getCondition() != "UNSUPPORTED_FEATURE.TABLE_OPERATION":
+                raise
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            df.writeTo(tbl).create()
+        return spark.read.table(tbl)
+    out = f"{output}/{name}"
+    df.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(sys.argv[1:] if argv is None else argv)
 
@@ -72,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     # so a missing --py-files fails with a clear module error.
     from pyspark.sql import SparkSession
 
+    from stakgraph_spark.operators import materialize as M
     from stakgraph_spark.operators.dialects import DIALECT_PACKS
     from stakgraph_spark.plans.pipeline import build_graph
     from stakgraph_spark.sources.transcripts import read_transcripts
@@ -93,57 +131,44 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     t0 = time.time()
-    counts: dict[str, int] = {}
     if args.resume_dir:
         # Checkpointed path: per-unit manifests under --resume-dir make
         # the job restartable after a kill (streaming/incremental.py) —
         # completed conv_id-bucket units are skipped on re-submit when
         # their input fingerprint still matches.
-        from stakgraph_spark.operators import materialize as M
         from stakgraph_spark.streaming.incremental import ResumableBuilder
 
         builder = ResumableBuilder(args.resume_dir)
         builder.run(spark, read_transcripts(spark, args.input))
-        edges = builder.edges(spark)
-        stages = {
-            "nodes": builder.nodes(spark),
-            "edges": edges,
-            "triples": M.triples(edges),
-        }
+        stages = {"nodes": builder.nodes(spark), "edges": builder.edges(spark)}
     else:
         stages = build_graph(spark, read_transcripts(spark, args.input),
                              repartition_by_conv=args.repartition_by_conv,
                              pack=pack)
 
+    # triples last: once edges are stored, triples is a projection of
+    # the stored table rather than a second run of the edge union
+    wanted.sort(key=lambda t: t == "triples")
+    sc = spark.sparkContext
+    stored, writes = {}, {}
     for name in wanted:
-        df = stages[name]
-        # Output stays clustered by the build's conv_id-prefixed keys;
-        # no terminal repartition — at 100 TB a coalesce here would
-        # serialize the write, and downstream readers want many files.
-        if args.output_table_prefix:
-            # Iceberg production path: V2 writeTo against whatever
-            # catalog the spark-submit line configured. createOrReplace
-            # is the idempotent-rerun analog of overwrite; incremental
-            # jobs use the MERGE path in sources/sinks.py instead.
-            tbl = f"{args.output_table_prefix}_{name}"
-            try:
-                # atomic replace where the catalog supports RTAS (Iceberg)
-                df.writeTo(tbl).createOrReplace()
-            except Exception:
-                # V2SessionCatalog (plain warehouse) has no RTAS:
-                # non-atomic drop+create is the idempotent fallback
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-                df.writeTo(tbl).create()
-            counts[name] = spark.read.table(tbl).count()
+        if name == "triples":
+            df = M.triples(stored.get("edges", stages["edges"]))
         else:
-            out = f"{args.output}/{name}"
-            df.write.mode("overwrite").parquet(out)
-            counts[name] = spark.read.parquet(out).count()
+            df = stages[name]
+        group = f"write:{name}"
+        sc.setJobGroup(group, group)
+        w0 = time.time()
+        stored[name] = write_table(spark, df, name, args.output, args.output_table_prefix)
+        rows = stored[name].count()
+        writes[name] = {"rows": rows, "write_s": round(time.time() - w0, 3),
+                        "jobs": len(sc.statusTracker().getJobIdsForGroup(group))}
 
     manifest = {
         "input": args.input,
         "pack": args.pack,
-        "tables": counts,
+        "tables": {name: w["rows"] for name, w in writes.items()},
+        "writes": writes,
         "elapsed_sec": round(time.time() - t0, 3),
         "spark_master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,

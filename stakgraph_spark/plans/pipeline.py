@@ -4,8 +4,11 @@ The reference's 14-stage build (ast/src/builder/core.rs:33-107)
 collapses, for transcripts, into the dependency DAG SURVEY.md §3.1
 identifies: scaffold -> entities -> in-file relations -> resolution
 joins -> global linkers. Stages are declarative DataFrame plans;
-Catalyst fuses them — materialization boundaries exist only at the
-sink (and at checkpoints for resume, streaming/incremental.py).
+Catalyst fuses them — build_graph itself materializes nothing. The
+callers' written tables are the boundaries: the submit job
+(scripts/submit_build.py) projects triples from the edges it has
+just written, and resumable builds checkpoint per unit
+(streaming/incremental.py).
 
 Partitioning doctrine: the transcript stream is repartitioned by
 conv_id once, up front; every per-conversation stage (extraction,
@@ -56,9 +59,11 @@ def build_graph(
     if persist_intermediates:
         # multi-action workloads (the driver's ~50 queries, an
         # interactive session): materialize the shared prefix once.
-        # Single-action builds (bench e2e, the resumable units) keep
-        # everything lazy — Spark's ReusedExchange dedups identical
-        # subtrees within one action without pinning memory.
+        # Single-action builds (the resumable units) keep everything
+        # lazy — Spark's ReusedExchange dedups identical subtrees
+        # within one action without pinning memory. The submit job
+        # is multi-action but stays lazy too: it writes each table
+        # once and shares the edge union through its written edges.
         transcripts = transcripts.persist()
 
     # The link stage consumes RAW (per-occurrence) mentions: its

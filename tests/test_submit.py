@@ -22,6 +22,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
+def _import_submit_build():
+    import sys
+
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    try:
+        import submit_build
+    finally:
+        sys.path.pop(0)
+    return submit_build
+
+
 @pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
 def test_submit_build_matches_inprocess(spark, tmp_path):
     # package
@@ -103,14 +114,7 @@ def test_submit_resume_dir_mode(spark, tmp_path):
     # ResumableBuilder; output must equal the single-shot build and a
     # re-submit must skip the completed units (manifest row count
     # unchanged — the repository-hash skip, handlers.rs:112-131).
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    try:
-        import submit_build
-    finally:
-        sys.path.pop(0)
-
+    submit_build = _import_submit_build()
     out, ckpt = str(tmp_path / "o"), str(tmp_path / "ckpt")
     argv = ["--input", SF_SMALL, "--output", out,
             "--resume-dir", ckpt, "--tables", "edges,triples"]
@@ -130,3 +134,96 @@ def test_submit_resume_dir_mode(spark, tmp_path):
     assert submit_build.main(argv) == 0  # re-submit: all units skipped
     spark = get_spark(master="local[8]")
     assert ResumableBuilder(ckpt).manifest(spark).count() == rows_before
+
+
+def test_submit_triples_projected_from_written_edges(spark, tmp_path):
+    # --tables lists triples first on purpose: edges must still be
+    # written first, and triples projected from the stored edges
+    # instead of running the edge union a second time.
+    submit_build = _import_submit_build()
+    out = str(tmp_path / "kg")
+    assert submit_build.main(["--input", SF_SMALL, "--output", out,
+                              "--tables", "triples,edges"]) == 0
+    manifest = json.load(open(f"{out}/_build_manifest.json"))
+    writes = manifest["writes"]
+    assert list(writes) == ["edges", "triples"]
+    assert manifest["tables"] == {"edges": writes["edges"]["rows"],
+                                  "triples": writes["triples"]["rows"]}
+    assert writes["triples"]["rows"] == writes["edges"]["rows"] > 0
+    # the projection's write and read-back; re-running the edge union
+    # lazily takes dozens of jobs
+    assert 0 < writes["triples"]["jobs"] <= 4 < writes["edges"]["jobs"]
+
+    from stakgraph_spark.session import get_spark
+
+    spark = get_spark(master="local[8]")  # main() stopped the session
+    trip = spark.read.parquet(f"{out}/triples")
+    edges = spark.read.parquet(f"{out}/edges")
+    a = trip.selectExpr("bit_xor(xxhash64(subj, pred, obj)) h").collect()[0]["h"]
+    b = edges.selectExpr(
+        "bit_xor(xxhash64(source_key, edge_type, target_key)) h").collect()[0]["h"]
+    assert a == b
+
+
+class _StubWriter:
+    def __init__(self, error, log):
+        self.error, self.log = error, log
+
+    def createOrReplace(self):
+        self.log.append("createOrReplace")
+        raise self.error
+
+    def create(self):
+        self.log.append("create")
+
+
+class _StubFrame:
+    def __init__(self, error, log):
+        self.writer = _StubWriter(error, log)
+
+    def writeTo(self, table):
+        return self.writer
+
+
+class _StubSession:
+    def __init__(self, log):
+        self.log = log
+        self.read = self
+
+    def sql(self, text):
+        self.log.append(text)
+
+    def table(self, name):
+        return name
+
+
+@pytest.mark.parametrize("error", [
+    RuntimeError("write failed"),
+    "TABLE_OR_VIEW_NOT_FOUND",
+], ids=["RuntimeError", "TABLE_OR_VIEW_NOT_FOUND"])
+def test_table_write_failure_keeps_existing_table(error):
+    # Only the session catalog's "no RTAS" error may fall back to
+    # drop + create; any other failure must propagate untouched.
+    from pyspark.errors import AnalysisException
+
+    submit_build = _import_submit_build()
+    if isinstance(error, str):
+        error = AnalysisException(message=error, errorClass=error)
+    log = []
+    with pytest.raises(type(error)):
+        submit_build.write_table(_StubSession(log), _StubFrame(error, log),
+                                 "edges", "unused", "kg")
+    assert log == ["createOrReplace"]
+
+
+def test_table_write_falls_back_when_catalog_lacks_rtas():
+    from pyspark.errors import AnalysisException
+
+    submit_build = _import_submit_build()
+    cond = "UNSUPPORTED_FEATURE.TABLE_OPERATION"
+    log = []
+    stored = submit_build.write_table(
+        _StubSession(log), _StubFrame(AnalysisException(message=cond, errorClass=cond), log),
+        "edges", "unused", "kg")
+    assert log == ["createOrReplace", "DROP TABLE IF EXISTS kg_edges", "create"]
+    assert stored == "kg_edges"
